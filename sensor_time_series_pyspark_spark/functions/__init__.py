@@ -13,11 +13,9 @@ from .vectors import (
 from .text import (
     char_ngrams,
     punct_ratio,
-    simhash64,
     stopword_ratio,
     token_count,
     tokens,
-    word_shingles,
 )
 
 __all__ = [
@@ -35,7 +33,5 @@ __all__ = [
     "token_count",
     "punct_ratio",
     "stopword_ratio",
-    "word_shingles",
     "char_ngrams",
-    "simhash64",
 ]

@@ -39,10 +39,8 @@ from .dedup import (
     jaccard_pairs_prefix,
     levenshtein_pairs,
     minhash_coeffs,
-    minhash_lsh_pairs,
     minhash_pairs,
     shingle_id_portable,
-    simhash_pairs,
     simhash_pairs_portable,
     spread,
 )
@@ -125,10 +123,8 @@ __all__ = [
     "jaccard_pairs",
     "jaccard_pairs_prefix",
     "minhash_coeffs",
-    "minhash_lsh_pairs",
     "minhash_pairs",
     "shingle_id_portable",
-    "simhash_pairs",
     "simhash_pairs_portable",
     "spread",
     "embedding_near_dup_pairs",

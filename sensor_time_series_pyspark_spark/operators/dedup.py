@@ -6,24 +6,31 @@ Four tiers, cheapest first:
 2. ngram/word Jaccard — inverted-index join: explode tokens, join on
    token, count shared per pair. Never materializes the full cross
    product; prune high-document-frequency tokens at scale.
-3. MinHash LSH  — pyspark.ml MinHashLSH (seeded) over hashed shingle
-   vectors; approxSimilarityJoin only compares within-bucket pairs.
-4. SimHash      — 64-bit signature, banded into 16-bit chunks: near-dups
-   (hamming ≤ t) must collide on ≥1 band when t < 64/bands, so the
-   candidate join is an equi-join on (band_id, band_value).
+3. MinHash LSH  — portable md5 shingle ids, affine-permutation
+   signatures, banded equi-join candidates; pure DataFrame algebra.
+4. SimHash      — 48-bit majority-vote signature banded into
+   ``n_bands`` chunks: a pair with hamming ≤ t < n_bands keeps ≥1 band
+   intact (pigeonhole), so the candidate join is an equi-join on
+   (band_id, band_val).
 
-All candidate-pair stages verify with an exact measure before
-reporting — LSH/banding only bound recall, never precision.
+The shingle-set operators are built from three stages:
+``_shingle_sets`` (id → distinct shingle set), ``_minhash_bands``
+(signature + band explode) and ``_verify_jaccard`` (exact Jaccard of
+candidate pairs). All candidate-pair stages verify with an exact
+measure before reporting — LSH/banding only bound recall, never
+precision.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import (
+    char_ngrams,
+    hashed_ngrams_from_tokens,
     shingles_from_tokens,
-    simhash64_from_shingles,
     tokens,
 )
 
@@ -38,10 +45,6 @@ def spread(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     no-op decision: call it only when expression cost ≫ row width."""
     n = parallelism or df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n)
-
-
-# internal alias kept for the call sites below
-_spread = spread
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -59,6 +62,66 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         .agg(F.min_by(F.struct(*df.columns), F.col(id_col)).alias("__r"))
     )
     return rep.select("__r.*")
+
+
+def _shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, shingle_k: int, unit: str
+) -> DataFrame:
+    """(id, tok): each document's distinct shingle set — k-word windows
+    (``unit='word'``) or character k-grams (``unit='char'``)."""
+    if unit == "word":
+        # Tokenize into a REAL column before shingling: the shingle
+        # transform's lambda re-evaluates free expressions per token
+        # index, so feeding it the tokenizer expression directly is
+        # O(tokens²) per row (functions/text.py:shingles_from_tokens).
+        # A bound attribute read per element is free.
+        base = df.select(
+            F.col(id_col).alias("id"), tokens(text_col).alias("__toks")
+        )
+        sh = (
+            shingles_from_tokens(F.col("__toks"), shingle_k)
+            if shingle_k > 1
+            else F.col("__toks")
+        )
+    elif unit == "char":
+        # char_ngrams' free variable is the plain text column (attribute
+        # read + substr per index) — no quadratic blowup, keep one step.
+        base = df.select(
+            F.col(id_col).alias("id"),
+            char_ngrams(text_col, shingle_k).alias("__toks"),
+        )
+        sh = F.col("__toks")
+    else:
+        raise ValueError(f"unit must be 'word' or 'char', got {unit!r}")
+    return base.select("id", F.array_distinct(sh).alias("tok"))
+
+
+def _verify_jaccard(
+    cands: DataFrame, arrs: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact verify of candidate (id_a, id_b) pairs: fetch both
+    documents' full (tok, n_tok) arrays from ``arrs`` (id, tok, n_tok),
+    intersect once per pair, keep jaccard ≥ threshold.
+    Output: id_a, id_b, jaccard."""
+    a, b = (
+        arrs.select(
+            F.col("id").alias(f"id_{s}"),
+            F.col("tok").alias(f"t{s}"),
+            F.col("n_tok").alias(f"n_{s}"),
+        )
+        for s in "ab"
+    )
+    verified = (
+        cands.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn("inter", F.size(F.array_intersect("ta", "tb")))
+    )
+    jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
+    return (
+        verified.withColumn("jaccard", jac)
+        .where(F.col("jaccard") >= F.lit(float(threshold)))
+        .select("id_a", "id_b", "jaccard")
+    )
 
 
 def jaccard_pairs(
@@ -82,31 +145,9 @@ def jaccard_pairs(
     valve: ubiquitous tokens generate O(df²) candidate pairs while
     contributing little to Jaccard.
     """
-    # Tokenize into a REAL column before shingling: the shingle
-    # transform's lambda re-evaluates free expressions per token index,
-    # so feeding it the tokenizer expression directly is O(tokens²) per
-    # row (functions/text.py:shingles_from_tokens). A bound attribute
-    # read per element is free.
-    if unit == "word":
-        base = _spread(df, parallelism).select(
-            F.col(id_col).alias("id"), tokens(text_col).alias("__toks")
-        )
-        shingles = (
-            shingles_from_tokens(F.col("__toks"), shingle_k)
-            if shingle_k > 1
-            else F.col("__toks")
-        )
-    elif unit == "char":
-        from ..functions.text import char_ngrams
-
-        # char_ngrams' free variable is the plain text column (attribute
-        # read + substr per index) — no quadratic blowup, keep one step.
-        base = _spread(df, parallelism).select(
-            F.col(id_col).alias("id"), char_ngrams(text_col, shingle_k).alias("__toks")
-        )
-        shingles = F.col("__toks")
-    else:
-        raise ValueError(f"unit must be 'word' or 'char', got {unit!r}")
+    sets = _shingle_sets(
+        spread(df, parallelism), id_col, text_col, shingle_k, unit
+    )
     # Hash each shingle to 64 bits INSIDE the array, before explode:
     # the inverted index then carries longs, not shingle strings —
     # ~4x smaller shuffle, cheaper key compares, and the explode never
@@ -114,9 +155,8 @@ def jaccard_pairs(
     # query). Collision risk ~n²/2⁶⁴ — at a billion distinct shingles
     # that's ~5e-2 spurious co-occurrences TOTAL, each worth +1
     # intersection count: immaterial.
-    toks = base.select(
-        "id",
-        F.transform(F.array_distinct(shingles), lambda s: F.xxhash64(s)).alias("tok"),
+    toks = sets.select(
+        "id", F.transform("tok", lambda s: F.xxhash64(s)).alias("tok")
     )
     inverted = toks.select(
         "id", F.size("tok").alias("n_tok"), F.explode("tok").alias("token")
@@ -132,8 +172,6 @@ def jaccard_pairs(
         # Enable when the upstream is expensive to recompute (e.g. a
         # filtered join feeds `df`, or max_token_df adds a third
         # consumer via the document-frequency aggregation).
-        from pyspark import StorageLevel
-
         inverted = inverted.persist(StorageLevel.MEMORY_AND_DISK)
     if max_token_df is not None:
         df_counts = inverted.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
@@ -218,28 +256,11 @@ def jaccard_pairs_prefix(
     Output: id_a, id_b (a < b), jaccard — identical contract to
     jaccard_pairs.
     """
-    if unit == "word":
-        base = _spread(df, parallelism).select(
-            F.col(id_col).alias("id"), tokens(text_col).alias("__toks")
-        )
-        sh = (
-            shingles_from_tokens(F.col("__toks"), shingle_k)
-            if shingle_k > 1
-            else F.col("__toks")
-        )
-    elif unit == "char":
-        from ..functions.text import char_ngrams
-
-        base = _spread(df, parallelism).select(
-            F.col(id_col).alias("id"),
-            char_ngrams(text_col, shingle_k).alias("__toks"),
-        )
-        sh = F.col("__toks")
-    else:
-        raise ValueError(f"unit must be 'word' or 'char', got {unit!r}")
-    toks = base.select(
-        "id",
-        F.transform(F.array_distinct(sh), lambda s: F.xxhash64(s)).alias("tok"),
+    sets = _shingle_sets(
+        spread(df, parallelism), id_col, text_col, shingle_k, unit
+    )
+    toks = sets.select(
+        "id", F.transform("tok", lambda s: F.xxhash64(s)).alias("tok")
     )
     inverted = toks.select("id", F.explode("tok").alias("token"))
 
@@ -277,8 +298,6 @@ def jaccard_pairs_prefix(
     # caller cache contract as dup_span_pairs/tfidf_cosine_pairs:
     # the returned lazy frame references the cache, clearCache between
     # invocations in long-lived sessions)
-    from pyspark import StorageLevel
-
     ranked = ranked.persist(StorageLevel.MEMORY_AND_DISK)
     pre = ranked.select(
         "id", "n_tok", F.explode("prefix").alias("token")
@@ -298,34 +317,7 @@ def jaccard_pairs_prefix(
         .select("id_a", "id_b")
         .distinct()
     )
-
-    # exact verify: fetch both full arrays, intersect once per pair
-    arrs = ranked.select("id", "tok", "n_tok")
-    verified = (
-        cands.join(
-            arrs.select(
-                F.col("id").alias("id_a"),
-                F.col("tok").alias("ta"),
-                F.col("n_tok").alias("n_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            arrs.select(
-                F.col("id").alias("id_b"),
-                F.col("tok").alias("tb"),
-                F.col("n_tok").alias("n_b"),
-            ),
-            "id_b",
-        )
-        .withColumn("inter", F.size(F.array_intersect("ta", "tb")))
-    )
-    jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-    return (
-        verified.withColumn("jaccard", jac)
-        .where(F.col("jaccard") >= F.lit(float(threshold)))
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verify_jaccard(cands, ranked.select("id", "tok", "n_tok"), threshold)
 
 
 # MinHash permutation arithmetic: h_i(x) = (a_i*x + b_i) mod P over
@@ -369,6 +361,43 @@ def shingle_id_fast(sh) -> F.Column:
     return F.pmod(F.xxhash64(sh), F.lit(MINHASH_P))
 
 
+def _minhash_bands(
+    sets: DataFrame, n_hashes: int, n_bands: int, seed: int, sid_fn
+) -> DataFrame:
+    """(id, band_id, band_key) rows for shingle sets (id, tok):
+    ``sid_fn`` shingle ids → ``n_hashes`` affine-permutation minima
+    (ONE map-side-combinable groupBy computes the whole signature) →
+    ``n_bands`` band keys of ``n_hashes / n_bands`` minima each."""
+    if n_hashes % n_bands != 0:
+        raise ValueError("n_hashes must divide evenly into n_bands")
+    r = n_hashes // n_bands
+    a_coef, b_coef = minhash_coeffs(n_hashes, seed)
+    ids = sets.select("id", F.explode(F.transform("tok", sid_fn)).alias("sid"))
+    sig = ids.groupBy("id").agg(
+        *[
+            F.min((F.lit(a_coef[i]) * F.col("sid") + F.lit(b_coef[i])) % MINHASH_P)
+            .alias(f"h{i}")
+            for i in range(n_hashes)
+        ],
+    )
+    return sig.select(
+        "id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(band).alias("band_id"),
+                        F.concat_ws(
+                            "|", *[F.col(f"h{band * r + j}") for j in range(r)]
+                        ).alias("band_key"),
+                    )
+                    for band in range(n_bands)
+                ]
+            )
+        ).alias("b"),
+    ).select("id", "b.band_id", "b.band_key")
+
+
 def minhash_pairs(
     df: DataFrame,
     id_col: str,
@@ -379,7 +408,6 @@ def minhash_pairs(
     n_bands: int = 8,
     seed: int = 42,
     parallelism: int | None = None,
-    persist_sets: bool = True,
     sid: str = "portable",
 ) -> DataFrame:
     """MinHash + banded LSH near-dup pairs, pure DataFrame algebra (no
@@ -400,62 +428,18 @@ def minhash_pairs(
     for xxhash64 (same banding math, not SQL-reproducible) — the
     variant ``jaccard_pairs_auto`` dispatches to at scale.
     """
-    if n_hashes % n_bands != 0:
-        raise ValueError("n_hashes must divide evenly into n_bands")
     if sid not in ("portable", "fast"):
         raise ValueError(f"sid must be 'portable' or 'fast', got {sid!r}")
     sid_fn = shingle_id_portable if sid == "portable" else shingle_id_fast
-    r = n_hashes // n_bands
-    a_coef, b_coef = minhash_coeffs(n_hashes, seed)
-
-    base = _spread(df, parallelism).select(
-        F.col(id_col).alias("id"), tokens(text_col).alias("__toks")
-    )
-    sh = (
-        shingles_from_tokens(F.col("__toks"), shingle_k)
-        if shingle_k > 1
-        else F.col("__toks")
-    )
-    toks = (
-        base.select("id", F.array_distinct(sh).alias("tok"))
+    # the shingle-set frame feeds the signature build AND both sides of
+    # the verify join — without a persist the whole upstream (scan +
+    # tokenize + shingle) recomputes 3x
+    sets = (
+        _shingle_sets(spread(df, parallelism), id_col, text_col, shingle_k, "word")
         .where(F.size("tok") > 0)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if persist_sets:
-        # the shingle-set frame feeds the signature build AND both
-        # sides of the verify join — without a persist the whole
-        # upstream (scan + tokenize + shingle) recomputes 3x
-        from pyspark import StorageLevel
-
-        toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
-    ids = toks.select(
-        "id",
-        F.size("tok").alias("n_tok"),
-        F.explode(F.transform(F.col("tok"), sid_fn)).alias("sid"),
-    )
-    sig = ids.groupBy("id").agg(
-        F.min("n_tok").alias("n_tok"),
-        *[
-            F.min((F.lit(a_coef[i]) * F.col("sid") + F.lit(b_coef[i])) % MINHASH_P)
-            .alias(f"h{i}")
-            for i in range(n_hashes)
-        ],
-    )
-    bands = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band_id"),
-                        F.concat_ws(
-                            "|", *[F.col(f"h{band * r + j}") for j in range(r)]
-                        ).alias("band_key"),
-                    )
-                    for band in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select("id", "b.band_id", "b.band_key")
+    bands = _minhash_bands(sets, n_hashes, n_bands, seed, sid_fn)
     cand = (
         bands.alias("a")
         .join(
@@ -467,72 +451,8 @@ def minhash_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    arrs = toks.select("id", "tok", F.size("tok").alias("n_tok"))
-    verified = (
-        cand.join(
-            arrs.select(
-                F.col("id").alias("id_a"),
-                F.col("tok").alias("ta"),
-                F.col("n_tok").alias("n_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            arrs.select(
-                F.col("id").alias("id_b"),
-                F.col("tok").alias("tb"),
-                F.col("n_tok").alias("n_b"),
-            ),
-            "id_b",
-        )
-        .withColumn("inter", F.size(F.array_intersect("ta", "tb")))
-    )
-    jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-    return (
-        verified.withColumn("jaccard", jac)
-        .where(F.col("jaccard") >= F.lit(float(threshold)))
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    jaccard_dist_threshold: float = 0.5,
-    num_hash_tables: int = 8,
-    num_features: int = 1 << 18,
-    shingle_k: int = 2,
-    seed: int = 42,
-    parallelism: int | None = None,
-) -> DataFrame:
-    """Approximate near-dup pairs via MinHash LSH
-    (pyspark.ml.feature.MinHashLSH — SURVEY.md §4: no custom Catalyst
-    work needed). Shingles → binary HashingTF vector → seeded MinHash
-    signatures → approxSimilarityJoin compares only candidate buckets.
-
-    Output: id_a, id_b (a < b), jaccard_dist (exact on hashed sets).
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    sh = _spread(df, parallelism).select(
-        F.col(id_col).alias("id"),
-        shingles_from_tokens(tokens(text_col), shingle_k).alias("shingles"),
-    ).where(F.size("shingles") > 0)
-    tf = HashingTF(
-        inputCol="shingles", outputCol="vec", numFeatures=num_features, binary=True
-    )
-    vecs = tf.transform(sh)
-    lsh = MinHashLSH(inputCol="vec", outputCol="sig", numHashTables=num_hash_tables, seed=seed)
-    model = lsh.fit(vecs)
-    joined = model.approxSimilarityJoin(vecs, vecs, jaccard_dist_threshold, distCol="jaccard_dist")
-    return (
-        joined.where(F.col("datasetA.id") < F.col("datasetB.id"))
-        .select(
-            F.col("datasetA.id").alias("id_a"),
-            F.col("datasetB.id").alias("id_b"),
-            F.col("jaccard_dist"),
-        )
+    return _verify_jaccard(
+        cand, sets.select("id", "tok", F.size("tok").alias("n_tok")), threshold
     )
 
 
@@ -545,7 +465,6 @@ def simhash_pairs_portable(
     n_bits: int = 48,
     n_bands: int = 8,
     parallelism: int | None = None,
-    persist_sigs: bool = True,
 ) -> DataFrame:
     """Engine-portable SimHash near-dup pairs: signatures are per-bit
     majority votes over the 48-bit md5-derived shingle ids (the same
@@ -553,31 +472,23 @@ def simhash_pairs_portable(
     bit_count(xor) verify all reproduce in ANSI SQL — q21 is
     differentially tested against DuckDB end-to-end.
 
-    Same scale shape as simhash_pairs (one groupBy builds all vote
-    counters map-side-combinably; candidates come from a band
-    equi-join, never a cross join). With n_bands=8 over 48 bits any
-    pair with hamming ≤ 7 shares an intact 6-bit band (pigeonhole), so
-    recall is exact for max_hamming ≤ 7.
+    Scale shape: one groupBy builds all vote counters
+    map-side-combinably; candidates come from a band equi-join, never a
+    cross join. With n_bands=8 over 48 bits any pair with hamming ≤ 7
+    shares an intact 6-bit band (pigeonhole), so recall is exact for
+    max_hamming ≤ 7.
 
     Output: id_a, id_b (a < b), hamming.
     """
     if n_bits % n_bands != 0:
         raise ValueError("n_bits must divide evenly into n_bands")
     band_width = n_bits // n_bands
-    base = _spread(df, parallelism).select(
-        F.col(id_col).alias("id"), tokens(text_col).alias("__toks")
-    )
-    sh = (
-        shingles_from_tokens(F.col("__toks"), shingle_k)
-        if shingle_k > 1
-        else F.col("__toks")
-    )
-    toks = base.select("id", F.array_distinct(sh).alias("tok")).where(
-        F.size("tok") > 0
-    )
+    sets = _shingle_sets(
+        spread(df, parallelism), id_col, text_col, shingle_k, "word"
+    ).where(F.size("tok") > 0)
     # full 48-bit id (no mod-P reduction — simhash wants the bits)
     sid = F.conv(F.substring(F.md5(F.col("sh")), 1, 12), 16, 10).cast("long")
-    ids = toks.select("id", F.explode("tok").alias("sh")).select(
+    ids = sets.select("id", F.explode("tok").alias("sh")).select(
         "id", sid.alias("sid")
     )
     votes = ids.groupBy("id").agg(
@@ -597,14 +508,12 @@ def simhash_pairs_portable(
             F.lit(0).cast("long")
         )
         sig_expr = term if sig_expr is None else sig_expr + term
-    sigs = votes.select("id", sig_expr.alias("sig"))
-    if persist_sigs:
-        # sigs (one long per doc) feed both sides of the band join —
-        # persist the tiny frame instead of recomputing the vote
-        # aggregation + upstream shingling twice
-        from pyspark import StorageLevel
-
-        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    # sigs (one long per doc) feed both sides of the band join —
+    # persist the tiny frame instead of recomputing the vote
+    # aggregation + upstream shingling twice
+    sigs = votes.select("id", sig_expr.alias("sig")).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     bands = sigs.select(
         "id",
         "sig",
@@ -635,67 +544,6 @@ def simhash_pairs_portable(
         .distinct()
     )
     hamming = F.bit_count(F.expr("sig_a ^ sig_b")).cast("int")
-    return (
-        cand.withColumn("hamming", hamming)
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 8,
-    shingle_k: int = 1,
-    n_bands: int = 8,
-    parallelism: int | None = None,
-) -> DataFrame:
-    """SimHash near-dup pairs: 64-bit signature (pure column algebra,
-    functions/text.py:simhash64), banded equi-join for candidates,
-    exact hamming (bit_count(xor)) verify.
-
-    With n_bands=8 (8 bits each), any pair with hamming ≤ 7 shares ≥1
-    intact band (pigeonhole) → recall is exact for max_hamming ≤ 7,
-    probabilistic above. Output: id_a, id_b, hamming.
-    """
-    sigs = _spread(df, parallelism).select(
-        F.col(id_col).alias("id"),
-        simhash64_from_shingles(
-            shingles_from_tokens(tokens(text_col), shingle_k)
-        ).alias("sig"),
-    )
-    band_width = 64 // n_bands
-    bands = sigs.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_id"),
-                        F.shiftrightunsigned(F.col("sig"), i * band_width)
-                        .bitwiseAND(F.lit((1 << band_width) - 1))
-                        .alias("band_val"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "sig", "band.band_id", "band.band_val")
-    a = bands.select(
-        "band_id", "band_val", F.col("id").alias("id_a"), F.col("sig").alias("sig_a")
-    )
-    b = bands.select(
-        "band_id", "band_val", F.col("id").alias("id_b"), F.col("sig").alias("sig_b")
-    )
-    cand = (
-        a.join(b, ["band_id", "band_val"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-        .distinct()
-    )
-    hamming = F.bit_count(F.expr("sig_a ^ sig_b"))
     return (
         cand.withColumn("hamming", hamming)
         .where(F.col("hamming") <= max_hamming)
@@ -739,8 +587,6 @@ def connected_components(
     # end to end (measured: q153 8.4 s → 1.9 s at sf0.1). Component
     # edges are pair-grain — far below corpus grain — so the
     # materialization is cheap at any scale.
-    from pyspark import StorageLevel
-
     sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         labels = sym.select("u").distinct().select(
@@ -869,7 +715,7 @@ def dedup_clusters(
     dst: str = "id_b",
 ) -> DataFrame:
     """Near-dup cluster assignment from a similarity-pair list (the
-    output of jaccard_pairs / minhash_lsh_pairs / simhash_pairs /
+    output of jaccard_pairs / minhash_pairs / simhash_pairs_portable /
     embedding_near_dup_pairs): each document that appears in at least
     one pair gets the cluster id = lowest doc id in its connected
     component — consistent with exact_dedup's lowest-id-wins canonical
@@ -997,46 +843,10 @@ def minhash_bands(
     (band_id, band_key) with the store. Same portable construction as
     minhash_pairs (md5 shingle ids + affine permutations), so bands
     computed in different runs/engines collide identically."""
-    if n_hashes % n_bands != 0:
-        raise ValueError("n_hashes must divide evenly into n_bands")
-    r = n_hashes // n_bands
-    a_coef, b_coef = minhash_coeffs(n_hashes, seed)
-    base = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("__toks"))
-    sh = (
-        shingles_from_tokens(F.col("__toks"), shingle_k)
-        if shingle_k > 1
-        else F.col("__toks")
-    )
-    toks = base.select("id", F.array_distinct(sh).alias("tok")).where(
+    sets = _shingle_sets(df, id_col, text_col, shingle_k, "word").where(
         F.size("tok") > 0
     )
-    ids = toks.select(
-        "id",
-        F.explode(F.transform(F.col("tok"), shingle_id_portable)).alias("sid"),
-    )
-    sig = ids.groupBy("id").agg(
-        *[
-            F.min((F.lit(a_coef[i]) * F.col("sid") + F.lit(b_coef[i])) % MINHASH_P)
-            .alias(f"h{i}")
-            for i in range(n_hashes)
-        ],
-    )
-    return sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band_id"),
-                        F.concat_ws(
-                            "|", *[F.col(f"h{band * r + j}") for j in range(r)]
-                        ).alias("band_key"),
-                    )
-                    for band in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select("id", "b.band_id", "b.band_key")
+    return _minhash_bands(sets, n_hashes, n_bands, seed, shingle_id_portable)
 
 
 def tfidf_cosine_pairs(
@@ -1045,7 +855,6 @@ def tfidf_cosine_pairs(
     text_col: str,
     threshold: float = 0.3,
     max_token_df: int | None = None,
-    exact: bool = True,
 ) -> DataFrame:
     """All document pairs with TF-IDF-weighted cosine similarity ≥
     threshold — the weighted upgrade of jaccard_pairs: rare shared
@@ -1058,16 +867,14 @@ def tfidf_cosine_pairs(
     pairs). Terms present in only one of the two docs contribute zero
     to the dot product, so indexing only shared terms is exact.
 
-    Numerics (``exact=True``): idf = (N - df + 0.5)/(df + 0.5) — the
-    BM25 ratio WITHOUT the log (bm25_rank's portability argument;
-    cosine ordering shifts, but the weighting intent — rare terms
-    dominate — is preserved and every bit is reproducible). The idf is
-    ONE double division cast once to decimal(15,6) (half-up, engine-
-    portable); weights tf·idf and all dot/norm accumulation stay exact
-    decimals; the ONLY float epilogue is dot/(√na·√nb) at the end.
-    decimal(15,6) weights bound tf·idf < 1e9 — beyond ~1.5e9 docs set
-    ``exact=False`` to run the plain double path (same plan, no
-    decimal ceiling, not oracle-reproducible).
+    Numerics: idf = (N - df + 0.5)/(df + 0.5) — the BM25 ratio WITHOUT
+    the log (bm25_rank's portability argument; cosine ordering shifts,
+    but the weighting intent — rare terms dominate — is preserved and
+    every bit is reproducible). The idf is ONE double division cast
+    once to decimal(15,6) (half-up, engine-portable); weights tf·idf
+    and all dot/norm accumulation stay exact decimals; the ONLY float
+    epilogue is dot/(√na·√nb) at the end. decimal(15,6) weights bound
+    tf·idf < 1e9, i.e. corpora up to ~1.5e9 docs.
 
     Cache contract: the weighted postings frame is persisted for the
     duration of the returned (lazy) frame's life — same caller
@@ -1085,16 +892,11 @@ def tfidf_cosine_pairs(
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     if max_token_df is not None:
         dfreq = dfreq.where(F.col("df") <= max_token_df)
-    idf_dbl = (
+    idf = (
         (F.lit(float(n_docs)) - F.col("df").cast("double") + F.lit(0.5))
         / (F.col("df").cast("double") + F.lit(0.5))
-    )
-    if exact:
-        idf = idf_dbl.cast("decimal(15,6)")
-        w = (F.col("tf").cast("decimal(9,0)") * F.col("idf")).cast("decimal(18,6)")
-    else:
-        idf = idf_dbl
-        w = F.col("tf").cast("double") * F.col("idf")
+    ).cast("decimal(15,6)")
+    w = (F.col("tf").cast("decimal(9,0)") * F.col("idf")).cast("decimal(18,6)")
     weighted = tf.join(dfreq.withColumn("idf", idf).select("term", "idf"), "term").select(
         "id", "term", w.alias("w")
     )
@@ -1103,15 +905,10 @@ def tfidf_cosine_pairs(
     # instead of re-running the tokenize + tf + idf pipeline per
     # consumer (guide §5; the q581 persist_shared precedent: postings
     # are tiny next to the corpus at any scale)
-    from pyspark import StorageLevel
-
     weighted = weighted.persist(StorageLevel.MEMORY_AND_DISK)
-    if exact:
-        norms = weighted.groupBy("id").agg(
-            F.sum((F.col("w") * F.col("w")).cast("decimal(38,12)")).alias("n2")
-        )
-    else:
-        norms = weighted.groupBy("id").agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
+    norms = weighted.groupBy("id").agg(
+        F.sum((F.col("w") * F.col("w")).cast("decimal(38,12)")).alias("n2")
+    )
     # ---- Bayardo/Ma/Srikant 2007 prefix filter (LOSSLESS) -------------
     # The naive inverted-index join generates a candidate row per
     # shared term per pair — Σ_term df² rows (223.5M at sf0.1 on the
@@ -1186,66 +983,50 @@ def tfidf_cosine_pairs(
     )
     na = norms.select(F.col("id").alias("id_a"), F.col("n2").alias("na"))
     nb = norms.select(F.col("id").alias("id_b"), F.col("n2").alias("nb"))
-    if exact:
-        # Two-pass verify. Pass 1 scores every candidate pair with a
-        # DOUBLE dot (primitive codegen sum — the decimal sum's boxed
-        # arithmetic is the verify stage's real cost) and keeps pairs
-        # with cos_dbl ≥ t − 1e-9: the double dot's relative error is
-        # ≤ ~n·2⁻⁵² ≈ 1e-14, so the margin provably loses nothing.
-        # Pass 2 recomputes the EXACT decimal dot for the survivors
-        # only (output grain — a few 10³–10⁴ pairs), so emitted
-        # cosines are bit-identical to the single-pass decimal sum.
-        dbl = (
-            cands.join(a, "id_a")
-            .join(b, ["id_b", "term"])
-            .groupBy("id_a", "id_b")
-            .agg(
-                F.sum(
-                    F.col("wa").cast("double") * F.col("wb").cast("double")
-                ).alias("dot_dbl")
-            )
-        )
-        cos_dbl = F.col("dot_dbl") / (
-            F.sqrt(F.col("na").cast("double"))
-            * F.sqrt(F.col("nb").cast("double"))
-        )
-        survivors = (
-            dbl.join(na, "id_a")
-            .join(nb, "id_b")
-            .where(cos_dbl >= F.lit(float(threshold) - 1e-9))
-            .select("id_a", "id_b", "na", "nb")
-        )
-        dots = (
-            survivors.join(a, "id_a")
-            .join(b, ["id_b", "term"])
-            .groupBy("id_a", "id_b", "na", "nb")
-            .agg(
-                F.sum((F.col("wa") * F.col("wb")).cast("decimal(38,12)")).alias(
-                    "dot"
-                )
-            )
-        )
-        cos = F.col("dot").cast("double") / (
-            F.sqrt(F.col("na").cast("double"))
-            * F.sqrt(F.col("nb").cast("double"))
-        )
-        return dots.select("id_a", "id_b", cos.alias("cosine")).where(
-            F.col("cosine") >= threshold
-        )
-    dots = (
+    # Two-pass verify. Pass 1 scores every candidate pair with a
+    # DOUBLE dot (primitive codegen sum — the decimal sum's boxed
+    # arithmetic is the verify stage's real cost) and keeps pairs
+    # with cos_dbl ≥ t − 1e-9: the double dot's relative error is
+    # ≤ ~n·2⁻⁵² ≈ 1e-14, so the margin provably loses nothing.
+    # Pass 2 recomputes the EXACT decimal dot for the survivors
+    # only (output grain — a few 10³–10⁴ pairs), so emitted
+    # cosines are bit-identical to the single-pass decimal sum.
+    dbl = (
         cands.join(a, "id_a")
         .join(b, ["id_b", "term"])
         .groupBy("id_a", "id_b")
-        .agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
+        .agg(
+            F.sum(
+                F.col("wa").cast("double") * F.col("wb").cast("double")
+            ).alias("dot_dbl")
+        )
+    )
+    cos_dbl = F.col("dot_dbl") / (
+        F.sqrt(F.col("na").cast("double"))
+        * F.sqrt(F.col("nb").cast("double"))
+    )
+    survivors = (
+        dbl.join(na, "id_a")
+        .join(nb, "id_b")
+        .where(cos_dbl >= F.lit(float(threshold) - 1e-9))
+        .select("id_a", "id_b", "na", "nb")
+    )
+    dots = (
+        survivors.join(a, "id_a")
+        .join(b, ["id_b", "term"])
+        .groupBy("id_a", "id_b", "na", "nb")
+        .agg(
+            F.sum((F.col("wa") * F.col("wb")).cast("decimal(38,12)")).alias(
+                "dot"
+            )
+        )
     )
     cos = F.col("dot").cast("double") / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
+        F.sqrt(F.col("na").cast("double"))
+        * F.sqrt(F.col("nb").cast("double"))
     )
-    return (
-        dots.join(na, "id_a")
-        .join(nb, "id_b")
-        .select("id_a", "id_b", cos.alias("cosine"))
-        .where(F.col("cosine") >= threshold)
+    return dots.select("id_a", "id_b", cos.alias("cosine")).where(
+        F.col("cosine") >= threshold
     )
 
 
@@ -1335,8 +1116,6 @@ def _positional_shared_grams(
     materialized. Downstream consumers only ever test gram EQUALITY,
     so the 64-bit identity is sufficient (collision math in the
     hashed_ngrams_from_tokens docstring)."""
-    from ..functions.text import hashed_ngrams_from_tokens
-
     toks = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("__t"))
     grams = toks.select(
         "id",
@@ -1405,8 +1184,6 @@ def dup_span_pairs(
         # to the corpus at any scale — so materializing it once is
         # the cheap side of the trade (measured 1.9x on q581 at
         # sf0.1). Set False when the caller persists upstream itself.
-        from pyspark import StorageLevel
-
         shared = shared.persist(StorageLevel.MEMORY_AND_DISK)
     a, b = shared.alias("a"), shared.alias("b")
     pairs = a.join(
@@ -1503,8 +1280,6 @@ def self_repeat_spans(
     gram strings are never built (same discipline and collision math
     as _positional_shared_grams).
     """
-    from ..functions.text import hashed_ngrams_from_tokens
-
     toks = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("__t"))
     grams = toks.select(
         "id",

@@ -33,13 +33,11 @@ from sensor_time_series_pyspark_spark.operators import (
     interpolate_linear,
     jaccard_pairs,
     lead_target,
-    minhash_lsh_pairs,
     minhash_pairs,
     pivot_wide,
     quantile_clip,
     resample,
     sessionize,
-    simhash_pairs,
     spread,
     topk_cosine,
 )
@@ -543,13 +541,11 @@ __all__ = [
     'interpolate_linear',
     'jaccard_pairs',
     'lead_target',
-    'minhash_lsh_pairs',
     'minhash_pairs',
     'pivot_wide',
     'quantile_clip',
     'resample',
     'sessionize',
-    'simhash_pairs',
     'spread',
     'topk_cosine',
     'classification_pipeline',

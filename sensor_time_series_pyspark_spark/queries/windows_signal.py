@@ -304,11 +304,7 @@ def _q_weighted_median(spark: SparkSession, sf: str) -> DataFrame:
 
     li = read_table(spark, sf, "lineitem")
     return weighted_median(
-        li,
-        ["l_returnflag"],
-        "l_extendedprice",
-        "l_quantity",
-        tiebreak_cols=["l_orderkey", "l_linenumber"],
+        li, ["l_returnflag"], "l_extendedprice", "l_quantity"
     )
 
 

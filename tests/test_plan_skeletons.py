@@ -1,5 +1,7 @@
 """Golden plan skeletons for all 13 headline bench queries
-(VERDICT r6 next-round #7).
+(VERDICT r6 next-round #7), plus the four other near-dup operators of
+operators/dedup.py (q20 MinHash, q21 SimHash, q45 char-gram prefix
+Jaccard, q160 TF-IDF cosine).
 
 test_plans.py pins individual properties (broadcast in the flagship,
 no cartesians, shuffle budgets as <= bounds). This module pins the
@@ -23,7 +25,9 @@ protect:
 - q23: the ONE BroadcastNestedLoopJoin this suite allows by design
   (broadcast queries x corpus scan, the declared verification tier);
 - q22: a single exchange (doc-grain rollup), everything else
-  map-side.
+  map-side;
+- q20/q21/q45/q160: built from dedup.py's shared shingle → band →
+  verify stages; the pins hold those stages' plans fixed.
 
 If a pin moves because of a DELIBERATE plan improvement, re-freeze the
 skeleton in the same commit and say why in its message.
@@ -115,6 +119,44 @@ SKELETONS: dict[str, dict[str, int]] = {
         "Sort": 1,
         "Window": 1,
     },
+    "q20_minhash_lsh": {
+        "Sort": 2,
+        "SortAggregate": 2,
+        "Exchange": 4,
+        "Generate": 4,
+        "HashAggregate": 6,
+        "BroadcastExchange": 3,
+        "BroadcastHashJoin": 3,
+    },
+    "q21_simhash": {
+        "Sort": 2,
+        "SortAggregate": 2,
+        "Exchange": 4,
+        "Generate": 3,
+        "HashAggregate": 4,
+        "BroadcastExchange": 1,
+        "BroadcastHashJoin": 1,
+    },
+    "q45_char_ngram_jaccard": {
+        "Sort": 4,
+        "SortAggregate": 4,
+        "Exchange": 7,
+        "Generate": 4,
+        "HashAggregate": 4,
+        "BroadcastExchange": 4,
+        "BroadcastHashJoin": 4,
+        "ObjectHashAggregate": 2,
+    },
+    "q160_tfidf_pairs": {
+        "Sort": 10,
+        "SortAggregate": 8,
+        "Exchange": 17,
+        "Generate": 4,
+        "HashAggregate": 28,
+        "BroadcastExchange": 12,
+        "BroadcastHashJoin": 12,
+        "Window": 2,
+    },
 }
 
 
@@ -130,12 +172,13 @@ def _skeleton(df) -> dict[str, int]:
 
 
 def test_headline_plan_skeletons(spark):
-    # cached frames from earlier tests would splice InMemoryTableScan
-    # into subtrees and change the counts — start clean
-    spark.catalog.clearCache()
     qs = entrymod.queries()
     diffs = {}
     for name, want in SKELETONS.items():
+        # cached frames from earlier tests or entries (q20 and q21
+        # persist the same shingle sets) would splice InMemoryTableScan
+        # into subtrees and change the counts — start each one clean
+        spark.catalog.clearCache()
         got = _skeleton(qs[name](spark, SF))
         if got != want:
             diffs[name] = {"want": want, "got": got}

@@ -352,10 +352,7 @@ def test_weighted_median_single_shuffle(spark):
 
     li = read_table(spark, SF, "lineitem")
     plan = plan_of(
-        weighted_median(
-            li, ["l_returnflag"], "l_extendedprice", "l_quantity",
-            ["l_orderkey", "l_linenumber"],
-        )
+        weighted_median(li, ["l_returnflag"], "l_extendedprice", "l_quantity")
     )
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 2
 

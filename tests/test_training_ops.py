@@ -209,6 +209,43 @@ def test_minhash_pairs_subset_of_exact_jaccard(spark, sf_dir):
         assert len(got) >= len(exact) * 0.5
 
 
+def test_minhash_pairs_share_a_band_in_minhash_bands(spark, sf_dir):
+    """Every pair minhash_pairs (portable sid) reports shares at least
+    one (band_id, band_key) of minhash_bands run with the same
+    parameters — the contract plans/corpus_ingest.py relies on when it
+    matches a batch's bands against bands stored by earlier runs."""
+    from sensor_time_series_pyspark_spark.operators import exact_dedup
+    from sensor_time_series_pyspark_spark.operators.dedup import minhash_bands
+    from sensor_time_series_pyspark_spark.sources.readers import read_table
+
+    reps = exact_dedup(read_table(spark, sf_dir, "documents"), "text", "doc_id")
+    # long bands (16 minima each) collide only on near-identical
+    # signatures, so a pair survives the check only if both operators
+    # build the same shingles, ids and permutations: on this corpus a
+    # different sid or seed leaves thousands of the ~10k pairs with no
+    # shared band
+    params = dict(shingle_k=1, n_hashes=32, n_bands=2, seed=7)
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in minhash_pairs(
+            reps, "doc_id", "text", threshold=0.2, sid="portable", **params
+        ).collect()
+    }
+    bands = minhash_bands(reps, "doc_id", "text", **params)
+    shared = {
+        (r["id_a"], r["id_b"])
+        for r in bands.select(F.col("id").alias("id_a"), "band_id", "band_key")
+        .join(
+            bands.select(F.col("id").alias("id_b"), "band_id", "band_key"),
+            ["band_id", "band_key"],
+        )
+        .select("id_a", "id_b")
+        .collect()
+    }
+    assert got, "corpus yields no MinHash pairs; the check would be vacuous"
+    assert got <= shared, sorted(got - shared)[:5]
+
+
 def test_simhash_portable_near_dups_collide(spark):
     from sensor_time_series_pyspark_spark.operators import simhash_pairs_portable
 
